@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
   * Posture: the bundle trains on the FIRST HALF of a scale dir's
   * near-duplicate-clustered corpus (copies 0..K/2−1 of every base
   * vector), publishes, then the second half ARRIVES and appends
-  * retrain-free (`Similarity.appendIvfPq` — coarse-assigned and
+  * retrain-free (`IvfPqIndex.append` — coarse-assigned and
   * PQ-encoded with the frozen artifacts). The comparison bundle
   * retrains on the full corpus with the registered recipe. Both serve
-  * the same queries over the same grown corpus via `ivfPqTopKFrom`,
+  * the same queries over the same grown corpus via `IvfPqIndex.serve`,
   * and recall@k scores against the exact L2 ground truth.
   *
   * Scoring is CROSS-CLUSTER (the RecallSweep caveat: same-cluster
@@ -31,7 +31,7 @@ object AnnAppendProbe {
     val mod = sys.env.get("SPARK_GRAFT_SWEEP_CLUSTER_MOD").map(_.toLong).getOrElse(2000L)
     val work = sys.env.getOrElse("SPARK_GRAFT_STREAM_WORK", "/tmp/ann_append_probe")
     val spark = GraftSession("graft-ann-append-probe")
-    import graft.operators.Similarity
+    import graft.operators.IvfPqIndex
 
     val full = graft.sources.Tables.embeddings(spark, d)
     val nBase = full.count()
@@ -85,21 +85,18 @@ object AnnAppendProbe {
       val pApp = s"$work/append_$tag"
       val pFull = s"$work/retrain_$tag"
       val t0 = System.nanoTime()
-      if (rot) Similarity.buildIvfPqRotated(spark, baseDir, pApp)
-      else Similarity.buildIvfPq(spark, baseDir, pApp)
+      IvfPqIndex.train(spark, baseDir, rotated = rot).save(pApp)
       val tTrain = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
-      Similarity.appendIvfPq(spark, pApp, arriving)
+      val appended = IvfPqIndex.append(spark, pApp, arriving)
       val tAppend = (System.nanoTime() - t1) / 1e9
       val t2 = System.nanoTime()
-      if (rot) Similarity.buildIvfPqRotated(spark, d, pFull)
-      else Similarity.buildIvfPq(spark, d, pFull)
+      IvfPqIndex.train(spark, d, rotated = rot).save(pFull)
       val tRetrain = (System.nanoTime() - t2) / 1e9
+      val retrained = IvfPqIndex.load(spark, pFull)
       Seq(2, 4, 8).foreach { nprobe =>
-        val rApp = recall(Similarity.ivfPqTopKFrom(spark, pApp, grown,
-          queries, kServe, nprobe))
-        val rFull = recall(Similarity.ivfPqTopKFrom(spark, pFull, grown,
-          queries, kServe, nprobe))
+        val rApp = recall(appended.serve(grown, queries, kServe, nprobe))
+        val rFull = recall(retrained.serve(grown, queries, kServe, nprobe))
         println(s"""{"probe":"ann_append_recall","bundle":"$tag","nprobe":$nprobe,""" +
           f""""recall_append":$rApp%.4f,"recall_retrain":$rFull%.4f,""" +
           f""""drift":${rFull - rApp}%.4f,"train_half_sec":$tTrain%.1f,""" +

@@ -15,7 +15,7 @@ object JobTrace {
     val d = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val spark = GraftSession("graft-job-trace")
-    import graft.operators.Similarity
+    import graft.operators.{IvfPqIndex, Similarity}
     import graft.sources.IndexStore
 
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -50,19 +50,20 @@ object JobTrace {
         }
       case None =>
         val pqPath = IndexStore.artifactPath("jobtrace_pq", s"$d|8|8|16")
-        trace("buildIvfPq (publish)")(() => Similarity.buildIvfPq(spark, d, pqPath))
-        trace("loadIvfPq (validated load)")(() =>
-          { IndexStore.loadIvfPq(spark, pqPath); () })
-        trace("ivfPqTopKAt (load+serve)")(() =>
-          Similarity.ivfPqTopKAt(spark, d, pqPath).collect())
+        val corpus = Similarity.embeddingCorpus(spark, d)
+        trace("IvfPqIndex.save (publish)")(() => IvfPqIndex.train(spark, d).save(pqPath))
+        trace("IvfPqIndex.load (validated load)")(() =>
+          { IvfPqIndex.load(spark, pqPath); () })
+        trace("IvfPqIndex.load + serve")(() => IvfPqIndex.load(spark, pqPath)
+          .serve(corpus, Similarity.embeddingProbes(spark, d)).collect())
         var epoch = 0L
-        trace("appendIvfPq")(() => {
+        trace("IvfPqIndex.append")(() => {
           epoch += 1
-          Similarity.appendIvfPq(spark, pqPath,
-            graft.sources.Tables.embeddings(spark, d)
-              .filter(col("vec_id") % 1000 === 999)
-              .select((col("vec_id") + lit(epoch * 10000000L)).as("vec_id"),
-                col("embedding")))
+          IvfPqIndex.append(spark, pqPath, corpus
+            .filter(col("vec_id") % 1000 === 999)
+            .select((col("vec_id") + lit(epoch * 10000000L)).as("vec_id"),
+              col("embedding")))
+          ()
         })
     }
     spark.stop()

@@ -49,7 +49,7 @@ object RecallSweep {
     // saturates with quantization noise from the extra probed cells.
     val rerankDepth = sys.env.get("SPARK_GRAFT_SWEEP_RERANK").map(_.toInt).getOrElse(0)
     val spark = GraftSession("graft-recall-sweep")
-    import graft.operators.Similarity
+    import graft.operators.{IvfPqIndex, Similarity}
 
     // exact L2 ground truth for the probe prefix: per query, the k
     // nearest OTHER vectors by squared distance (double arithmetic —
@@ -101,14 +101,18 @@ object RecallSweep {
       hits.toDouble / (k * truth.size)
     }
 
+    def serve(rotated: Boolean, nCodes: Int, nprobe: Int) =
+      IvfPqIndex.train(spark, d, nCodes = nCodes, rotated = rotated)
+        .serve(Similarity.embeddingCorpus(spark, d),
+          Similarity.embeddingProbes(spark, d, s"vec_id < $nQueries"),
+          kServe, nprobe, rerankDepth)
+
     for (nCodes <- Seq(16, 64); nprobe <- Seq(2, 4, 8)) {
       val t0 = System.nanoTime()
-      val plain = recall(Similarity.ivfPqTopK(spark, d, kServe, nQueries,
-        nprobe = nprobe, nCodes = nCodes, rerankDepth = rerankDepth))
+      val plain = recall(serve(rotated = false, nCodes, nprobe))
       val tp = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
-      val rot = recall(Similarity.ivfPqRotatedTopK(spark, d, kServe, nQueries,
-        nprobe = nprobe, nCodes = nCodes, rerankDepth = rerankDepth))
+      val rot = recall(serve(rotated = true, nCodes, nprobe))
       val tr = (System.nanoTime() - t1) / 1e9
       println(s"""{"sweep":"recall","n_codes":$nCodes,"nprobe":$nprobe,""" +
         s""""rerank":$rerankDepth,""" +

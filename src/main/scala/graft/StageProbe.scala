@@ -251,33 +251,23 @@ object StageProbe {
     //      meta counts), LOAD (meta read + manifest existence check +
     //      three validated relation reads), serve-over-loaded. ----
     if (enabled("ann_persisted")) locally {
-      import graft.operators.Similarity
+      import graft.operators.{IvfPqIndex, Similarity}
       import graft.sources.IndexStore
       Seq(false, true).foreach { rotated =>
         val tag = if (rotated) "ivfpqprobe_rot" else "ivfpqprobe"
         val path = IndexStore.artifactPath(tag, s"$d|8|8|16")
         val t0 = System.nanoTime()
-        if (rotated) Similarity.buildIvfPqRotated(spark, d, path)
-        else Similarity.buildIvfPq(spark, d, path)
+        IvfPqIndex.train(spark, d, rotated = rotated).save(path)
         val buildColdSec = (System.nanoTime() - t0) / 1e9
         val buildWarmSec = best(() =>
-          if (rotated) Similarity.buildIvfPqRotated(spark, d, path)
-          else Similarity.buildIvfPq(spark, d, path))
-        val loadSec = best(() => {
-          val (cent, cb, codes, _, _) = IndexStore.loadIvfPq(spark, path)
-          // loadIvfPq already ran its validation counts; touch nothing more
-          (cent, cb, codes)
-        })
-        val atSec = best(() => {
-          val r = if (rotated) Similarity.ivfPqRotatedTopKAt(spark, d, path)
-                  else Similarity.ivfPqTopKAt(spark, d, path)
-          r.collect()
-        })
-        val fullSec = best(() => {
-          val r = if (rotated) Similarity.ivfPqRotatedTopKPersisted(spark, d)
-                  else Similarity.ivfPqTopKPersisted(spark, d)
-          r.collect()
-        })
+          IvfPqIndex.train(spark, d, rotated = rotated).save(path))
+        // load runs its validation counts; touch nothing more
+        val loadSec = best(() => IvfPqIndex.load(spark, path))
+        val atSec = best(() => IvfPqIndex.load(spark, path)
+          .serve(Similarity.embeddingCorpus(spark, d),
+            Similarity.embeddingProbes(spark, d)).collect())
+        val fullSec = best(() =>
+          Similarity.ivfPqPersistedTopK(spark, d, rotated).collect())
         val nManifest = {
           val p = new org.apache.hadoop.fs.Path(s"$path/codes")
           val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -350,7 +340,7 @@ object StageProbe {
     //      (warm memos: the training subtree is already cached, so the
     //      counted jobs are the publish/load/serve constant itself). ----
     if (enabled("job_counts")) locally {
-      import graft.operators.{Similarity, TextOps}
+      import graft.operators.{IvfPqIndex, Similarity, TextOps}
       import graft.sources.IndexStore
       val counter = new java.util.concurrent.atomic.AtomicInteger()
       val listener = new org.apache.spark.scheduler.SparkListener {
@@ -369,10 +359,11 @@ object StageProbe {
         counter.get()
       }
       val pqPath = IndexStore.artifactPath("jobsprobe_pq", s"$d|8|8|16")
-      val nBuildPq = jobs(() => Similarity.buildIvfPq(spark, d, pqPath))
-      val nLoadPq = jobs(() => { IndexStore.loadIvfPq(spark, pqPath); () })
-      val nServePq = jobs(() =>
-        Similarity.ivfPqTopKAt(spark, d, pqPath).collect())
+      val nBuildPq = jobs(() => IvfPqIndex.train(spark, d).save(pqPath))
+      val nLoadPq = jobs(() => { IvfPqIndex.load(spark, pqPath); () })
+      val nServePq = jobs(() => IvfPqIndex.load(spark, pqPath)
+        .serve(Similarity.embeddingCorpus(spark, d),
+          Similarity.embeddingProbes(spark, d)).collect())
       val dePath = IndexStore.artifactPath("jobsprobe_de", s"$d|src5")
       val nSaveDedup = jobs(() => {
         val (sha, bands, sets) = TextOps.dedupSignatureFrames(
@@ -387,7 +378,7 @@ object StageProbe {
       var appendEpoch = 0L // fresh vec_ids per append (the caller contract)
       val nAppendPq = jobs(() => {
         appendEpoch += 1
-        Similarity.appendIvfPq(spark, pqPath,
+        IvfPqIndex.append(spark, pqPath,
           graft.sources.Tables.embeddings(spark, d)
             .filter(col("vec_id") % 1000 === 999)
             .select((col("vec_id") + lit(appendEpoch * 10000000L)).as("vec_id"),

@@ -644,7 +644,7 @@ object StreamScale {
     // asserted to never scan the event volume / to read every ANN index
     // relation from the bundle. ----
     if (explicitly("xproc_build")) locally {
-      import graft.operators.{EventAnalytics, Similarity, TextOps}
+      import graft.operators.{EventAnalytics, IvfPqIndex, TextOps}
       import graft.sources.IndexStore
       val root = s"$work/xproc"
       val t0 = System.nanoTime()
@@ -659,7 +659,7 @@ object StreamScale {
         spark, sfDir, col("source") =!= "src2")
       IndexStore.saveDedupSignatures(spark, sha, bands, sets, s"$root/dedupstore")
       val tDedup = (System.nanoTime() - t0) / 1e9 - tLeaf
-      Similarity.buildIvfPqRotated(spark, sfDir, s"$root/ivfpqrot")
+      IvfPqIndex.train(spark, sfDir, rotated = true).save(s"$root/ivfpqrot")
       val tRot = (System.nanoTime() - t0) / 1e9 - tLeaf - tDedup
       val leafRows = IndexStore.loadLeafStore(spark, s"$root/leafstore").count()
       val shaRows = IndexStore.loadDedupSignatures(spark, s"$root/dedupstore")._1.count()
@@ -670,7 +670,7 @@ object StreamScale {
     }
 
     if (explicitly("xproc_serve")) locally {
-      import graft.operators.{EventAnalytics, Similarity, TextOps}
+      import graft.operators.{EventAnalytics, IvfPqIndex, Similarity, TextOps}
       val root = s"$work/xproc"
       val t0 = System.nanoTime()
       def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
@@ -683,7 +683,8 @@ object StreamScale {
       val leaf = rows(leafDf)
       val dedup = TextOps.crossDedupAgainstStore(spark, sfDir, s"$root/dedupstore", "src2")
         .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
-      val topkDf = Similarity.ivfPqRotatedTopKAt(spark, sfDir, s"$root/ivfpqrot")
+      val topkDf = IvfPqIndex.load(spark, s"$root/ivfpqrot").serve(
+        Similarity.embeddingCorpus(spark, sfDir), Similarity.embeddingProbes(spark, sfDir))
       val topk = rows(topkDf)
       val serveSec = (System.nanoTime() - t0) / 1e9
       // plan posture: the leaf-served answers never scan the event
@@ -703,7 +704,8 @@ object StreamScale {
       val parityLeaf = leaf == rows(EventAnalytics.eventDailyLeaf(spark, sfDir))
       val parityDedup = dedup == TextOps.crossDedup(spark, sfDir, "src2")
         .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
-      val parityTopk = topk == rows(Similarity.ivfPqRotatedTopK(spark, sfDir))
+      val parityTopk = topk == rows(Similarity.ivfPqTrainedTopK(spark, sfDir,
+        rotated = true))
       println(s"""{"face":"xproc_serve","pid":${ProcessHandle.current().pid},""" +
         s""""serve_sec":${f"$serveSec%.1f"},"parity_wau":$parityWau,""" +
         s""""parity_churn":$parityChurn,"parity_leaf":$parityLeaf,""" +
@@ -718,8 +720,8 @@ object StreamScale {
     // ---- face 9: steady-state streaming ANN serving (VERDICT r14 #5)
     // — face 8 proves the bundle mounts across processes ONCE; this is
     // the steady state: a rotated IVFADC bundle trained and published
-    // once, MOUNTED once (Similarity.mountIvfPq — index relations +
-    // rotated corpus persisted, rotation matrix collected once), then
+    // once, MOUNTED once (IvfPqIndex.mount — index relations + corpus
+    // persisted, rotation matrix decoded once at load), then
     // arriving QUERY batches served top-k per micro-batch in a
     // foreachBatch loop (maxFilesPerTrigger=1 — one query file per
     // micro-batch). Claims measured: per-batch wall stays FLAT as
@@ -728,12 +730,12 @@ object StreamScale {
     // nothing grows with batch count), and the UNION of streamed
     // answers equals the batch load-only serve bit-for-bit. ----
     if (enabled("ann_serve_stream")) locally {
-      import graft.operators.Similarity
+      import graft.operators.{IvfPqIndex, Similarity}
       import graft.sources.IndexStore
       val path = s"$work/ann_serve_bundle"
       IndexStore.resetDir(spark, path)
       val tB = System.nanoTime()
-      Similarity.buildIvfPqRotated(spark, sfDir, path)
+      IvfPqIndex.train(spark, sfDir, rotated = true).save(path)
       val buildSec = (System.nanoTime() - tB) / 1e9
       val nBatches = sys.env.get("SPARK_GRAFT_ANN_BATCHES").map(_.toInt).getOrElse(8)
       val perBatch = sys.env.get("SPARK_GRAFT_ANN_BATCH_QUERIES").map(_.toInt).getOrElse(25)
@@ -747,7 +749,8 @@ object StreamScale {
           .coalesce(1).write.mode("append").parquet(qDir)
       }
       val tM = System.nanoTime()
-      val serve = Similarity.mountIvfPq(spark, sfDir, path)
+      val corpus = Similarity.embeddingCorpus(spark, sfDir)
+      val serve = IvfPqIndex.load(spark, path).mount(corpus)
       // warm the mount's persisted relations with a 1-query serve so
       // the steady-state walls measure serving, not the one-time cache
       // materialization a long-lived server pays at startup
@@ -768,8 +771,9 @@ object StreamScale {
           ()
         }.start()
       try q.processAllAvailable() finally q.stop()
-      val truth = Similarity.ivfPqRotatedTopKAt(spark, sfDir, path,
-        nQueries = nBatches * perBatch)
+      val truth = IvfPqIndex.load(spark, path)
+        .serve(corpus, Similarity.embeddingProbes(spark, sfDir,
+          s"vec_id < ${nBatches * perBatch}"))
         .collect().map(_.toSeq).toSet
       val parity = got.toSet == truth
       println(s"""{"face":"ann_serve_stream","build_sec":${f"$buildSec%.1f"},""" +

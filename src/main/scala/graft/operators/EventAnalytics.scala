@@ -1269,10 +1269,6 @@ object EventAnalytics {
   def rollingActiveUsersStoreAt(spark: SparkSession, path: String): DataFrame =
     rollingActiveServe(dailyBitmapsOfLeaves(leavesAt(spark, path)))
 
-  /** [[retentionCohortsFromStore]]'s load-only face. */
-  def retentionCohortsStoreAt(spark: SparkSession, path: String): DataFrame =
-    retentionServe(dailyBitmapsOfLeaves(leavesAt(spark, path)))
-
   /** [[userChurnFromStore]]'s load-only face. */
   def userChurnStoreAt(spark: SparkSession, path: String): DataFrame =
     churnServe(dailyBitmapsOfLeaves(leavesAt(spark, path)))

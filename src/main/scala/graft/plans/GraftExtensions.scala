@@ -1294,10 +1294,6 @@ object GraftFunctions {
   def bitmapAndCard(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("bitmap_and_card", a, b)
 
-  /** Column wrapper for [[BitmapOrCard]] — exact binary union count. */
-  def bitmapOrCard(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("bitmap_or_card", a, b)
-
   /** Column wrapper for [[BitmapAndNotCard]] — exact difference count. */
   def bitmapAndNotCard(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("bitmap_andnot_card", a, b)
@@ -1410,10 +1406,6 @@ object GraftFunctions {
     org.apache.spark.sql.functions.call_function("bloom_state", lo, hi,
       org.apache.spark.sql.functions.lit(k),
       org.apache.spark.sql.functions.lit(mBits))
-
-  /** Column wrapper for [[BloomMerge]] — word-wise-OR filter fold. */
-  def bloomMerge(sk: Column): Column =
-    org.apache.spark.sql.functions.call_function("bloom_merge", sk)
 
   /** Column wrapper for [[BloomContains]] — membership probe. */
   def bloomContains(sk: Column, lo: Column, hi: Column): Column =

@@ -438,24 +438,24 @@ object IndexStore {
         .coalesce(1).write.mode("overwrite").parquet(gen))
   }
 
-  /** The IVF-PQ bundle: coarse probing centroids, residual codebook,
-    * cell-tagged PQ codes — everything [[graft.operators.Similarity]]'s
-    * `ivfPqServe` needs; raw vectors are touched only by the re-rank
-    * join, from the corpus table itself. `rotation` (optional, round
-    * 13) carries the OPQ-style orthonormal basis the bundle was trained
-    * in as one (dim, matrix) row — a serving job MUST rotate queries by
-    * exactly this matrix, so it rides in the artifact and the loader
-    * fails fast when a rotated bundle is probed as plain (or vice
-    * versa). */
+  /** The IVF-PQ bundle of a [[graft.operators.IvfPqIndex]]: coarse
+    * probing centroids, residual codebook, cell-tagged PQ codes; raw
+    * vectors are touched only by the serve's re-rank join, from the
+    * caller's corpus. `rotation` (optional, round 13) is the
+    * orthonormal basis the bundle was trained in, stored as one
+    * (dim, matrix) row — this module is the only place that knows that
+    * format: it encodes it here and decodes it once per load. */
   def saveIvfPq(spark: SparkSession, cent: DataFrame, codebook: DataFrame,
-                codes: DataFrame, path: String,
-                nlists: Int, nSub: Int, nCodes: Int,
-                rotation: Option[DataFrame] = None): Unit = {
+                codes: DataFrame, path: String, nSub: Int, nCodes: Int,
+                rotation: Option[Array[Array[Double]]]): Unit = {
     val expected = latestCompleteGen(spark, path)
     val centRel = cent.select(col("list_id"), col("cemb"))
     val cbRel = codebook.select(col("sub_id"), col("code"), col("cemb"))
     val codesRel = codes.select(col("vec_id"), col("sub_id"), col("code"),
       col("list_id"))
+    import spark.implicits._
+    val rotRel = rotation.map(r =>
+      Seq((r.length.toLong, r.map(_.toSeq).toSeq)).toDF("dim", "rot"))
     // ONE count action over the publish's input relations sizes every
     // file count AND fills the meta row (r18, VERDICT r17 next #1: was
     // 3 sizing counts + a read-back re-count = 4 actions). The inputs
@@ -464,13 +464,11 @@ object IndexStore {
     // manifest files against these meta numbers on every load.
     val n = countTogether(Seq(
       "centroids" -> centRel, "codebook" -> cbRel, "codes" -> codesRel) ++
-      rotation.map("rotation" -> _))
+      rotRel.map("rotation" -> _))
     writeSized(centRel, s"$path/centroids", 600, n("centroids"))
     writeSized(cbRel, s"$path/codebook", 100, n("codebook"))
     writeSized(codesRel, s"$path/codes", 40, n("codes"))
-    rotation.foreach(_.select(col("dim"), col("rot"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/rotation"))
-    import spark.implicits._
+    rotRel.foreach(_.coalesce(1).write.mode("overwrite").parquet(s"$path/rotation"))
     // codes are the bundle's APPENDABLE relation (arriving vectors
     // encode against the trained artifacts and join the store,
     // [[appendIvfPqCodes]]) — manifest-listed like the dedup store's
@@ -478,7 +476,7 @@ object IndexStore {
     val fCodes = partFiles(spark, path, "codes")
     val nRot = n.getOrElse("rotation", 0L)
     writeMeta(spark, path, expected)(gen =>
-      Seq((FormatVersion, nlists, nSub, nCodes,
+      Seq((FormatVersion, n("centroids").toInt, nSub, nCodes,
           n("centroids"), n("codebook"), n("codes"),
           nRot, fCodes))
         .toDF("format_version", "nlists", "n_sub", "n_codes",
@@ -493,38 +491,29 @@ object IndexStore {
     * [[appendDedupSignatures]] shape: no retrain, no re-encode of the
     * corpus; new part files land under `codes/`, then meta commits
     * LAST as a fresh CAS generation whose manifest = prior manifest +
-    * this append's dir diff. A crash before the meta commit leaves
+    * this append's files. A crash before the meta commit leaves
     * orphans the manifest never names ([[loadIvfPq]] keeps serving the
     * prior generation; [[vacuumIvfPqStore]] reclaims the bytes); a
-    * concurrent writer trips [[writeMeta]]'s claim/re-check and this
-    * append aborts with its rows NOT in the store. Training-shape meta
+    * writer whose base advanced since the caller read `m`/`expected`
+    * trips [[writeMeta]]'s claim/re-check and this append aborts with
+    * its rows NOT in the store. Training-shape meta
     * (nlists/n_sub/n_codes/centroid/codebook/rotation counts) carries
-    * over unchanged — the ENCODER is frozen; only code rows grow.
-    * Callers encode with the bundle's own trained artifacts
-    * (`Similarity.appendIvfPq`), which is what keeps append+serve
-    * answers identical to a retrain-free batch rebuild.
+    * over unchanged — the ENCODER is frozen; only code rows grow. Callers
+    * encode with the bundle's own trained artifacts
+    * ([[graft.operators.IvfPqIndex.append]]), which is what keeps
+    * append+serve answers identical to a retrain-free batch rebuild.
     *
     * This append's part files land under their OWN `codes/append-*`
     * subdir (ADVICE r16): the manifest addition is exactly the files
     * this writer wrote, so even when two appends race, the winner's
     * manifest can never capture the aborted loser's rows (the prior
     * dir-diff could — and a retry would then re-append them,
-    * duplicating code rows that double ADC distance contributions). */
-  def appendIvfPqCodes(spark: SparkSession, newCodes: DataFrame,
-                       path: String): Unit =
-    appendIvfPqCodes(spark, newCodes, path, ivfPqMeta(spark, path),
-      latestCompleteGen(spark, path))
-
-  /** [[appendIvfPqCodes]] over a meta row + CAS base generation the
-    * caller already read (r18: [[graft.operators.Similarity.appendIvfPq]]
-    * validates the bundle's artifacts first, and the previous code
-    * re-read + re-collected the same meta generation here — two more
-    * driver jobs per append). A writer whose base advanced between that
-    * read and this commit still aborts at [[writeMeta]]'s re-check,
-    * exactly as before. */
+    * duplicating code rows that double ADC distance contributions).
+    * Returns the grown code relation (the committed manifest; no Spark
+    * action). */
   private[graft] def appendIvfPqCodes(spark: SparkSession, newCodes: DataFrame,
                                       path: String, m: org.apache.spark.sql.Row,
-                                      expected: Option[Long]): Unit = {
+                                      expected: Option[Long]): DataFrame = {
     val sub = appendSubdir("codes")
     newCodes.select(col("vec_id"), col("sub_id"), col("code"), col("list_id"))
       .write.parquet(s"$path/$sub")
@@ -552,6 +541,7 @@ object IndexStore {
           "n_centroids", "n_codebook", "n_code_rows", "n_rotation",
           "files_codes")
         .coalesce(1).write.mode("overwrite").parquet(gen))
+    readManifest(spark, path, grown, Some(Schemas.pqCodes))
   }
 
   private def ivfPqMeta(spark: SparkSession,
@@ -577,88 +567,31 @@ object IndexStore {
       vacuumStaleClaims(spark, path)
   }
 
-  /** Loads and validates the bundle; the fourth element is the
-    * rotation relation iff the bundle was trained in a rotated basis —
-    * a caller expecting a plain bundle must check (ivfPqServe probes
-    * raw queries; probing a rotated bundle with raw queries would be
-    * silently wrong, hence fail-fast in the serving wrappers). The
-    * fifth element is the bundle's n_codes — serving sizes its default
-    * ADC shortlist from the TRAINED subquantizer coarseness, so the
-    * meta value, not a caller guess, is the source of truth. */
-  def loadIvfPq(spark: SparkSession, path: String)
-      : (DataFrame, DataFrame, DataFrame, Option[DataFrame], Int) = {
-    val (cent, cb, codes, rot, m) = loadIvfPqWithMeta(spark, path)
-    (cent, cb, codes, rot, m.getAs[Int]("n_codes"))
-  }
-
-  /** [[loadIvfPq]] + the validated meta row — for callers that need
-    * training-shape fields beyond n_codes (the append path's nSub
-    * fail-fast), without a SECOND meta-generation read job (r17). */
-  private[graft] def loadIvfPqWithMeta(spark: SparkSession, path: String)
-      : (DataFrame, DataFrame, DataFrame, Option[DataFrame],
-         org.apache.spark.sql.Row) = {
-    val m = ivfPqMeta(spark, path)
-    val cent = spark.read.schema(Schemas.pqCentroids).parquet(s"$path/centroids")
-    val cb = spark.read.schema(Schemas.pqCodebook).parquet(s"$path/codebook")
-    // codes read MANIFEST files only (v3): orphans from a torn append
-    // are invisible; a manifest file missing on disk is corruption
+  /** The bundle's centroid, codebook and rotation relations as
+    * pinned-schema reads, once every manifest code file is on disk. */
+  private def ivfPqArtifacts(spark: SparkSession, path: String,
+                             m: org.apache.spark.sql.Row)
+      : (DataFrame, DataFrame, Option[DataFrame]) = {
     val files = m.getAs[scala.collection.Seq[String]]("files_codes").toSeq
     val missing = missingFromDisk(spark, path, files)
     require(missing.isEmpty,
       s"ivfpq index at $path: manifest code files missing on disk: ${missing.mkString(", ")}")
-    val codes = readManifest(spark, path, files, Some(Schemas.pqCodes))
-    val rot = if (m.getAs[Long]("n_rotation") > 0)
-      Some(spark.read.schema(Schemas.pqRotation).parquet(s"$path/rotation"))
-    else None
-    // all validation counts in ONE action (r17: was 3-4 back-to-back
-    // count jobs per load — the persisted-ANN constant)
-    val n = countTogether(Seq(
-      "centroids" -> cent, "codebook" -> cb, "codes" -> codes) ++
-      rot.map("rotation" -> _))
-    require(n("centroids") == m.getAs[Long]("n_centroids") && m.getAs[Long]("n_centroids") > 0,
-      s"ivfpq index at $path: centroid rows disagree with meta")
-    require(n("codebook") == m.getAs[Long]("n_codebook") && m.getAs[Long]("n_codebook") > 0,
-      s"ivfpq index at $path: codebook rows disagree with meta")
-    require(n("codes") == m.getAs[Long]("n_code_rows") && m.getAs[Long]("n_code_rows") > 0,
-      s"ivfpq index at $path: code rows disagree with meta")
-    rot.foreach { _ =>
-      require(n("rotation") == m.getAs[Long]("n_rotation"),
-        s"ivfpq index at $path: rotation rows disagree with meta")
-    }
-    (cent, cb, codes, rot, m)
+    (spark.read.schema(Schemas.pqCentroids).parquet(s"$path/centroids"),
+      spark.read.schema(Schemas.pqCodebook).parquet(s"$path/codebook"),
+      if (m.getAs[Long]("n_rotation") > 0)
+        Some(spark.read.schema(Schemas.pqRotation).parquet(s"$path/rotation"))
+      else None)
   }
 
-  /** The IVF-PQ artifacts an APPEND needs — centroids, codebook,
-    * rotation — validated against meta in ONE Spark action that also
-    * yields the bundle's trained dim (r18, VERDICT r17 next #1
-    * follow-through): the full validated load re-counted the whole
-    * CODE relation per append, O(store) work to validate data the
-    * append never reads, plus a separate one-row job probing the
-    * centroid width. The codes MANIFEST is still checked against disk
-    * (driver-side listing — a corrupted store still fails the append
-    * fast before writing anything), and every SERVING load still
-    * validates codes row counts, so a write that dropped code rows is
-    * caught exactly where those rows are first read. Returns
-    * (cent, cb, rotation, meta row, CAS base generation, trained dim).
-    */
-  private[graft] def loadIvfPqForAppend(spark: SparkSession, path: String)
-      : (DataFrame, DataFrame, Option[DataFrame], org.apache.spark.sql.Row,
-         Option[Long], Int) = {
-    val m = ivfPqMeta(spark, path)
-    val expected = latestCompleteGen(spark, path)
-    val cent = spark.read.schema(Schemas.pqCentroids).parquet(s"$path/centroids")
-    val cb = spark.read.schema(Schemas.pqCodebook).parquet(s"$path/codebook")
-    val rot = if (m.getAs[Long]("n_rotation") > 0)
-      Some(spark.read.schema(Schemas.pqRotation).parquet(s"$path/rotation"))
-    else None
-    val files = m.getAs[scala.collection.Seq[String]]("files_codes").toSeq
-    val missing = missingFromDisk(spark, path, files)
-    require(missing.isEmpty,
-      s"ivfpq index at $path: manifest code files missing on disk: ${missing.mkString(", ")}")
-    // one job: centroid/codebook/rotation counts + the trained dim
-    // (max centroid width) as a per-partition tally union — the same
-    // counts the requires below compare, the same dim the old
-    // one-row probe job read
+  /** Validate a bundle's relations against meta in ONE Spark action
+    * that also yields the trained dim (max centroid width): a
+    * per-partition tally union — the same counts the named requires
+    * below compare (r17/r18: was 3-4 count jobs plus a one-row
+    * dim-probe job per load). A zero-partition relation (torn store:
+    * empty dir) tallies as 0, so its named require fires. */
+  private def validateIvfPq(path: String, m: org.apache.spark.sql.Row,
+                            cent: DataFrame,
+                            rels: Seq[(String, DataFrame)]): Int = {
     val centParts = cent.select(size(col("cemb"))).rdd.mapPartitions { it =>
       var c = 0L; var d = 0
       while (it.hasNext) {
@@ -673,24 +606,76 @@ object IndexStore {
         while (it.hasNext) { it.next(); c += 1 }
         Iterator((name, c, 0))
       }
-    val rows = spark.sparkContext.union(
-      Seq(centParts, tally("codebook", cb)) ++ rot.map(tally("rotation", _)))
-      .collect()
-    // zero-partition relations tally as 0 (named requires fire, not a
-    // bare key error — the countTogether edge, same reasoning)
-    val n = (Seq("centroids", "codebook") ++ rot.map(_ => "rotation"))
-      .map(k => k -> rows.filter(_._1 == k).map(_._2).sum).toMap
-    require(n("centroids") == m.getAs[Long]("n_centroids") && m.getAs[Long]("n_centroids") > 0,
-      s"ivfpq index at $path: centroid rows disagree with meta")
-    require(n("codebook") == m.getAs[Long]("n_codebook") && m.getAs[Long]("n_codebook") > 0,
-      s"ivfpq index at $path: codebook rows disagree with meta")
-    rot.foreach { _ =>
-      require(n("rotation") == m.getAs[Long]("n_rotation"),
-        s"ivfpq index at $path: rotation rows disagree with meta")
+    val rows = cent.sparkSession.sparkContext
+      .union(centParts +: rels.map { case (n, df) => tally(n, df) }).collect()
+    ("centroids" +: rels.map(_._1)).foreach { rel =>
+      val (key, noun) = rel match {
+        case "centroids" => ("n_centroids", "centroid")
+        case "codebook"  => ("n_codebook", "codebook")
+        case "codes"     => ("n_code_rows", "code")
+        case "rotation"  => ("n_rotation", "rotation")
+      }
+      val want = m.getAs[Long](key)
+      require(rows.filter(_._1 == rel).map(_._2).sum == want &&
+          (want > 0 || rel == "rotation"),
+        s"ivfpq index at $path: $noun rows disagree with meta")
     }
-    val trainedDim = rows.collect { case ("centroids", _, d) => d }
-      .foldLeft(0)(math.max) // n_centroids > 0 is already required above
-    (cent, cb, rot, m, expected, trainedDim)
+    rows.collect { case ("centroids", _, d) => d }.foldLeft(0)(math.max)
+  }
+
+  /** The stored rotation as a dim×dim matrix — its one row, declaring
+    * the bundle's trained dim. A bounded driver collect (one job). */
+  private def decodeRotation(path: String, rot: DataFrame,
+                             dim: Int): Array[Array[Double]] = {
+    val rows = rot.collect()
+    require(rows.length == 1,
+      s"ivfpq bundle at $path: rotation relation malformed (${rows.length} rows, expected 1)")
+    val r = rows.head
+      .getAs[scala.collection.Seq[scala.collection.Seq[Double]]]("rot")
+      .map(_.toArray).toArray
+    require(rows.head.getAs[Long]("dim") == dim && r.length == dim &&
+        r.forall(_.length == dim),
+      s"ivfpq bundle at $path: rotation relation malformed (dim " +
+        s"${rows.head.getAs[Long]("dim")}, trained at dim=$dim)")
+    r
+  }
+
+  /** Load and validate the bundle: (centroids, codebook, codes,
+    * rotation iff trained rotated, n_codes, n_sub, trained dim). Codes
+    * read MANIFEST files only (v3): orphans from a torn append are
+    * invisible; a manifest file missing on disk is corruption. */
+  private[graft] def loadIvfPq(spark: SparkSession, path: String)
+      : (DataFrame, DataFrame, DataFrame, Option[Array[Array[Double]]],
+         Int, Int, Int) = {
+    val m = ivfPqMeta(spark, path)
+    val (cent, cb, rot) = ivfPqArtifacts(spark, path, m)
+    val codes = readManifest(spark, path,
+      m.getAs[scala.collection.Seq[String]]("files_codes").toSeq,
+      Some(Schemas.pqCodes))
+    val dim = validateIvfPq(path, m, cent,
+      Seq("codebook" -> cb, "codes" -> codes) ++ rot.map("rotation" -> _))
+    (cent, cb, codes, rot.map(decodeRotation(path, _, dim)),
+      m.getAs[Int]("n_codes"), m.getAs[Int]("n_sub"), dim)
+  }
+
+  /** The IVF-PQ artifacts an APPEND needs — centroids, codebook,
+    * rotation — validated in ONE action (r18, VERDICT r17 next #1
+    * follow-through): a serving load re-counts the whole CODE
+    * relation, O(store) work to validate data the append never reads.
+    * The codes MANIFEST is still checked against disk (driver-side
+    * listing — a corrupted store fails the append before writing
+    * anything), and every serving load still validates code row
+    * counts. Returns (cent, cb, rotation, meta row, CAS base
+    * generation, trained dim). */
+  private[graft] def loadIvfPqForAppend(spark: SparkSession, path: String)
+      : (DataFrame, DataFrame, Option[Array[Array[Double]]],
+         org.apache.spark.sql.Row, Option[Long], Int) = {
+    val m = ivfPqMeta(spark, path)
+    val expected = latestCompleteGen(spark, path)
+    val (cent, cb, rot) = ivfPqArtifacts(spark, path, m)
+    val dim = validateIvfPq(path, m, cent,
+      Seq("codebook" -> cb) ++ rot.map("rotation" -> _))
+    (cent, cb, rot.map(decodeRotation(path, _, dim)), m, expected, dim)
   }
 
   /** The cross-corpus DEDUP signature store: content hashes (h → min

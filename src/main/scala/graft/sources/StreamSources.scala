@@ -86,17 +86,6 @@ object StreamSources {
         col("timestamp").as("ts"))
   }
 
-  /** Streaming file-drop readers for the reference CSV formats —
-    * `readStream` over a directory with the same schemas CsvSources
-    * uses for batch (one logical format, two physical modes). */
-  def loginEventsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(CsvSources.loginEventSchema).csv(dir)
-      .withColumn("ts", timestamp_seconds(col("eventTime")))
-
-  def orderEventsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(CsvSources.orderEventSchema).csv(dir)
-      .withColumn("ts", timestamp_seconds(col("eventTime")))
-
   /** maxFilesPerTrigger < 1 → unthrottled; ≥ 1 caps files per
     * micro-batch (tests use 1 to force one batch per dropped file). */
   def userBehaviorStream(spark: SparkSession, dir: String,

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{IvfPqIndex, Similarity}
 
 /** Similarity-search semantics: scalar cosine correctness, brute-force
   * top-k sanity, and IVF recall against the exact baseline. */
@@ -84,7 +84,7 @@ class SimilaritySpec extends AnyFunSuite {
     def keys(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val out = Similarity.ivfPqTopK(spark, sf)
+    val out = Similarity.ivfPqTrainedTopK(spark, sf)
     val rows = out.collect()
     val byQ = rows.groupBy(_.getAs[Long]("query_id"))
     assert(byQ.forall(_._2.length == 5), "k rows per query")
@@ -151,9 +151,8 @@ class SimilaritySpec extends AnyFunSuite {
     val queries = src.toSeq.map { case (id, v) =>
       (id + 1000000L, v.map(x => x + 0.001f))
     }.toDF("query_id", "embedding")
-    val got = Similarity.ivfPqTopK(spark, sf, queries, k = 3, nprobe = 2,
-        nlists = 8, ivfIters = 2, nSub = 8, nCodes = 16, iters = 2, dim = 64,
-        rerankDepth = 0)
+    val got = IvfPqIndex.train(spark, sf)
+      .serve(Similarity.embeddingCorpus(spark, sf), queries, k = 3, nprobe = 2)
       .filter(col("rank") === 1).collect()
       .map(r => r.getAs[Long]("query_id") -> r.getAs[Long]("neighbor_id")).toMap
     // ε-perturbed copies must land in the source's cell, survive the
@@ -462,7 +461,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(exact.size == 50) // 10 queries × 5
     val rIvf = (keys(Similarity.annIvfTopK(spark, d).collect()) & exact).size
       .toDouble / exact.size
-    val rPq = (keys(Similarity.ivfPqTopK(spark, d).collect()) & exact).size
+    val rPq = (keys(Similarity.ivfPqTrainedTopK(spark, d).collect()) & exact).size
       .toDouble / exact.size
     val rTr = (keys(Similarity.annIvfTopKTrained(spark, d).collect()) & exact).size
       .toDouble / exact.size
@@ -485,7 +484,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(exact.size == 50)
     val rIvf = (keys(Similarity.annIvfTopK(spark, d).collect()) & exact).size
       .toDouble / exact.size
-    val rPq = (keys(Similarity.ivfPqTopK(spark, d).collect()) & exact).size
+    val rPq = (keys(Similarity.ivfPqTrainedTopK(spark, d).collect()) & exact).size
       .toDouble / exact.size
     val rTr = (keys(Similarity.annIvfTopKTrained(spark, d).collect()) & exact).size
       .toDouble / exact.size
@@ -798,8 +797,8 @@ class SimilaritySpec extends AnyFunSuite {
     val e2 = intercept[IllegalArgumentException](IndexStore.loadIvf(spark, torn))
     assert(e2.getMessage.contains("centroid rows"))
     // the compressed-index bundle round-trips identically too
-    assert(key(Similarity.ivfPqTopKPersisted(spark, sf)) ==
-      key(Similarity.ivfPqTopK(spark, sf)))
+    assert(key(Similarity.ivfPqPersistedTopK(spark, sf)) ==
+      key(Similarity.ivfPqTrainedTopK(spark, sf)))
   }
 
   test("covariance-rotated PQ: isometry holds, recall floor vs plain ADC (VERDICT r11 #4)") {
@@ -861,30 +860,29 @@ class SimilaritySpec extends AnyFunSuite {
     // the SERVING floor the verdict asked for: the rotated bundle must
     // not lose recall vs the plain bundle on the standard probes
     // (deterministic chains — measured 0.38 vs 0.36 on this corpus)
-    val plain = recall(Similarity.ivfPqTopK(spark, sf, k, nQueries))
-    val rot = recall(Similarity.ivfPqRotatedTopK(spark, sf, k, nQueries))
+    val plain = recall(Similarity.ivfPqTrainedTopK(spark, sf))
+    val rot = recall(Similarity.ivfPqTrainedTopK(spark, sf, rotated = true))
     assert(rot >= plain, s"rotated IVFADC recall $rot < plain $plain")
     assert(rot > 0.1, s"rotated IVFADC recall degenerate: $rot")
     // persisted round-trip: serving from the saved bundle (rotation
     // relation included — the LOADED matrix rotates the queries)
     // equals the fresh-trained serve row for row
     def key(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
-    assert(key(Similarity.ivfPqRotatedTopKPersisted(spark, sf)) ==
-      key(Similarity.ivfPqRotatedTopK(spark, sf)))
+    assert(key(Similarity.ivfPqPersistedTopK(spark, sf, rotated = true)) ==
+      key(Similarity.ivfPqTrainedTopK(spark, sf, rotated = true)))
     // the artifact layer declares the basis: a rotated bundle loads
-    // with its dim×dim rotation relation, a plain bundle without — the
-    // serving wrappers fail fast on the mismatch (require in both)
+    // with its dim×dim rotation, a plain bundle without
     import graft.sources.IndexStore
     val rotPath = IndexStore.artifactPath("ivfpqrot", s"$sf|8|8|16")
-    val (_, _, _, rotRel, nCodesMeta) = IndexStore.loadIvfPq(spark, rotPath)
-    assert(nCodesMeta == 16, s"bundle meta n_codes: $nCodesMeta")
-    assert(rotRel.isDefined, "rotated bundle lost its rotation relation")
-    val m = rotRel.get.collect()
-    assert(m.length == 1 && m.head.getAs[Long]("dim") == 64L &&
-      m.head.getAs[scala.collection.Seq[scala.collection.Seq[Double]]]("rot").length == 64)
+    val rotIdx = IvfPqIndex.load(spark, rotPath)
+    assert(rotIdx.nCodes == 16 && rotIdx.nSub == 8 && rotIdx.dim == 64,
+      s"bundle meta: n_codes=${rotIdx.nCodes} n_sub=${rotIdx.nSub} dim=${rotIdx.dim}")
+    assert(rotIdx.rotation.map(_.map(_.toSeq).toSeq) ==
+      Some(Similarity.pqRotationFor(spark, sf).map(_.toSeq).toSeq),
+      "rotated bundle lost (or altered) its trained rotation")
     val plainPath = IndexStore.artifactPath("ivfpq", s"$sf|8|8|16")
-    Similarity.ivfPqTopKPersisted(spark, sf).count() // materialize the plain bundle
-    assert(IndexStore.loadIvfPq(spark, plainPath)._4.isEmpty,
+    Similarity.ivfPqPersistedTopK(spark, sf).count() // materialize the plain bundle
+    assert(IvfPqIndex.load(spark, plainPath).rotation.isEmpty,
       "plain bundle unexpectedly carries a rotation")
   }
 
@@ -897,25 +895,28 @@ class SimilaritySpec extends AnyFunSuite {
     // absent store: every load-only face fails fast NAMING the artifact
     // — never a silent fresh train
     Seq(
-      () => Similarity.ivfPqTopKAt(spark, sf, pqPath).collect(),
-      () => Similarity.ivfPqRotatedTopKAt(spark, sf, rotPath).collect(),
+      () => IvfPqIndex.load(spark, pqPath),
       () => Similarity.annIvfTopKAt(spark, sf, ivfPath).collect()
-    ).zip(Seq(pqPath, rotPath, ivfPath)).foreach { case (f, p) =>
+    ).zip(Seq(pqPath, ivfPath)).foreach { case (f, p) =>
       val e = intercept[IllegalArgumentException](f())
       assert(e.getMessage.contains(p), s"absent-store error does not name $p")
     }
     // ingest session trains once at the explicit durable paths…
-    Similarity.buildIvfPq(spark, sf, pqPath)
-    Similarity.buildIvfPqRotated(spark, sf, rotPath)
+    val plain = IvfPqIndex.train(spark, sf)
+    plain.save(pqPath)
+    IvfPqIndex.train(spark, sf, rotated = true).save(rotPath)
     Similarity.buildAnnIvf(spark, sf, ivfPath)
     // …and a SECOND session (fresh session state, none of the builder
-    // session's memos) serves top-k from the mounted artifacts
+    // session's memos) serves top-k from the mounted artifacts — each
+    // bundle self-describes its basis, so one serve path covers both
     val s2 = spark.newSession()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
-    val dfPq = Similarity.ivfPqTopKAt(s2, sf, pqPath)
-    assert(rows(dfPq) == rows(Similarity.ivfPqTopK(spark, sf)) && rows(dfPq).nonEmpty)
-    val dfRot = Similarity.ivfPqRotatedTopKAt(s2, sf, rotPath)
-    assert(rows(dfRot) == rows(Similarity.ivfPqRotatedTopK(spark, sf)))
+    def served(p: String) = IvfPqIndex.load(s2, p)
+      .serve(Similarity.embeddingCorpus(s2, sf), Similarity.embeddingProbes(s2, sf))
+    val dfPq = served(pqPath)
+    assert(rows(dfPq) == rows(Similarity.ivfPqTrainedTopK(spark, sf)) && rows(dfPq).nonEmpty)
+    val dfRot = served(rotPath)
+    assert(rows(dfRot) == rows(Similarity.ivfPqTrainedTopK(spark, sf, rotated = true)))
     val dfIvf = Similarity.annIvfTopKAt(s2, sf, ivfPath)
     assert(rows(dfIvf) == rows(Similarity.annIvfTopKTrained(spark, sf)))
     // plan pin: every index relation comes from the ARTIFACT — the
@@ -938,58 +939,72 @@ class SimilaritySpec extends AnyFunSuite {
     val planRot = dfRot.queryExecution.executedPlan.toString
     assert(bundleScans(planRot, rotPath) == 3,
       s"rotated face does not read all three bundle relations from $rotPath:\n$planRot")
-    // (the rotation relation is a one-row driver-side collect by
-    // construction, so it does not appear in the SERVE plan — its use
-    // is pinned by the basis-mismatch fail-fasts below and by row
-    // equality with the fresh-train truth)
+    // (the rotation relation is decoded once at load — a one-row
+    // driver-side collect — so it does not appear in the SERVE plan;
+    // its use is pinned by row equality with the fresh-train truth)
     assert(embScans(planRot) <= 10,
       s"rotated face scans embeddings ${embScans(planRot)}x — train subtree?\n$planRot")
-    // basis mismatch fails fast BOTH ways
-    val eRot = intercept[IllegalArgumentException](
-      Similarity.ivfPqTopKAt(s2, sf, rotPath).collect())
-    assert(eRot.getMessage.contains("rotated basis"))
-    val ePlain = intercept[IllegalArgumentException](
-      Similarity.ivfPqRotatedTopKAt(s2, sf, pqPath).collect())
-    assert(ePlain.getMessage.contains("trained unrotated"))
+    // the rotation decode names a malformed relation: one of another
+    // width than the trained centroids…
+    val narrow = s"$root/narrow"
+    plain.copy(rotation = Some(Array.tabulate(32, 32)((i, j) =>
+      if (i == j) 1.0 else 0.0))).save(narrow)
+    val eDim = intercept[IllegalArgumentException](IvfPqIndex.load(s2, narrow))
+    assert(eDim.getMessage.contains(
+      s"ivfpq bundle at $narrow: rotation relation malformed (dim 32, trained at dim=64)"),
+      eDim.getMessage)
+    // …and one of two rows, under a meta generation that agrees with
+    // its row count (so only the decode can object)
+    val twoRows = s"$root/tworows"
+    IvfPqIndex.train(spark, sf, rotated = true).save(twoRows)
+    val rot = spark.read.parquet(s"$twoRows/rotation")
+    spark.createDataFrame(java.util.List.of(rot.head()), rot.schema)
+      .write.mode("append").parquet(s"$twoRows/rotation")
+    spark.read.parquet(s"$twoRows/meta/v1").withColumn("n_rotation", lit(2L))
+      .write.parquet(s"$twoRows/meta/v2")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(
+      s"$twoRows/meta/v2/${IndexStore.CommitMarker}"))
+    val eRows = intercept[IllegalArgumentException](IvfPqIndex.load(s2, twoRows))
+    assert(eRows.getMessage.contains(
+      s"ivfpq bundle at $twoRows: rotation relation malformed (2 rows, expected 1)"),
+      eRows.getMessage)
   }
 
   test("mountIvfPq: mounted bundle serves arbitrary query batches ≡ batch load-only serve (VERDICT r14 #5)") {
-    import graft.operators.Similarity
     val root = java.nio.file.Files.createTempDirectory("graftmount").toString
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
-    val emb = graft.sources.Tables.embeddings(spark, sf)
-      .select(col("vec_id").as("query_id"), col("embedding"))
+    val corpus = Similarity.embeddingCorpus(spark, sf)
+    val emb = corpus.select(col("vec_id").as("query_id"), col("embedding"))
     // rotated bundle: mount once, serve two DISJOINT micro-batch-shaped
     // query frames — their union equals the covering batch serve bit
     // for bit (the streaming-face parity contract, StreamScale face 9)
     val rotPath = s"$root/rot"
-    Similarity.buildIvfPqRotated(spark, sf, rotPath)
-    val serveRot = Similarity.mountIvfPq(spark, sf, rotPath)
+    IvfPqIndex.train(spark, sf, rotated = true).save(rotPath)
+    val rotIdx = IvfPqIndex.load(spark, rotPath)
+    val serveRot = rotIdx.mount(corpus)
     val b1 = rows(serveRot(emb.filter(col("query_id") < 4)))
     val b2 = rows(serveRot(emb.filter(
       col("query_id") >= 4 && col("query_id") < 8)))
     assert(b1.nonEmpty && b2.nonEmpty && (b1 & b2).isEmpty)
-    assert((b1 ++ b2) ==
-      rows(Similarity.ivfPqRotatedTopKAt(spark, sf, rotPath, nQueries = 8)))
-    // plain bundle mounts through the same closure (the bundle
+    assert((b1 ++ b2) == rows(rotIdx.serve(corpus,
+      Similarity.embeddingProbes(spark, sf, "vec_id < 8"))))
+    // plain bundle mounts through the same path (the bundle
     // self-describes its basis — no caller flag to get wrong)
     val pqPath = s"$root/plain"
-    Similarity.buildIvfPq(spark, sf, pqPath)
-    val servePlain = Similarity.mountIvfPq(spark, sf, pqPath)
-    assert(rows(servePlain(emb.filter(col("query_id") < 5))) ==
-      rows(Similarity.ivfPqTopKAt(spark, sf, pqPath, nQueries = 5)))
-    // absent bundle fails fast at MOUNT time, naming the artifact
+    IvfPqIndex.train(spark, sf).save(pqPath)
+    val plainIdx = IvfPqIndex.load(spark, pqPath)
+    assert(rows(plainIdx.mount(corpus)(emb.filter(col("query_id") < 5))) ==
+      rows(plainIdx.serve(corpus, Similarity.embeddingProbes(spark, sf, "vec_id < 5"))))
+    // absent bundle fails fast at LOAD time, naming the artifact
     val e = intercept[IllegalArgumentException](
-      Similarity.mountIvfPq(spark, sf, s"$root/absent"))
+      IvfPqIndex.load(spark, s"$root/absent"))
     assert(e.getMessage.contains(s"$root/absent"))
   }
 
   test("appendIvfPq: arrivals join the published bundle retrain-free; grown serve ≡ one-shot frozen-artifact encode; CAS still throws (VERDICT r15 next #6)") {
-    import graft.operators.Similarity
     import graft.sources.IndexStore
     val root = java.nio.file.Files.createTempDirectory("graftannapp").toString
-    val emb = graft.sources.Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding"))
+    val emb = Similarity.embeddingCorpus(spark, sf)
     val nBase = emb.count()
     // arrivals: the table's own vectors under new ids — deterministic,
     // and each one's nearest neighbor in the grown corpus is itself or
@@ -1000,25 +1015,28 @@ class SimilaritySpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding"))
+    def codeRows(p: String) = IvfPqIndex.load(spark, p).codes.count()
 
     // path A: two successive appends (two CAS generations, manifest
     // union); path B: the same arrivals in ONE append — the frozen
     // encoder is deterministic, so the stores must serve identically
     val pA = s"$root/a"; val pB = s"$root/b"
-    Similarity.buildIvfPq(spark, sf, pA)
-    Similarity.buildIvfPq(spark, sf, pB)
-    Similarity.appendIvfPq(spark, pA, arriving.filter(col("vec_id") < 100020L))
-    Similarity.appendIvfPq(spark, pA, arriving.filter(col("vec_id") >= 100020L))
-    Similarity.appendIvfPq(spark, pB, arriving)
-    val (_, _, codesA, _, _) = IndexStore.loadIvfPq(spark, pA)
-    assert(codesA.count() == (nBase + 40) * 8,
+    val plain = IvfPqIndex.train(spark, sf)
+    plain.save(pA)
+    plain.save(pB)
+    IvfPqIndex.append(spark, pA, arriving.filter(col("vec_id") < 100020L))
+    val grownA = IvfPqIndex.append(spark, pA, arriving.filter(col("vec_id") >= 100020L))
+    IvfPqIndex.append(spark, pB, arriving)
+    assert(codeRows(pA) == (nBase + 40) * 8,
       "grown store's code rows != (base + appended) * nSub")
-    val servedA = rows(Similarity.ivfPqTopKFrom(spark, pA, grown, queries))
-    assert(servedA == rows(Similarity.ivfPqTopKFrom(spark, pB, grown, queries))
+    val servedA = rows(IvfPqIndex.load(spark, pA).serve(grown, queries))
+    assert(servedA == rows(IvfPqIndex.load(spark, pB).serve(grown, queries))
       && servedA.nonEmpty)
+    // the index append returns IS the grown store
+    assert(rows(grownA.serve(grown, queries)) == servedA)
     // an appended vector probed by its own embedding finds an exact
     // dist-0 copy (itself or its original twin) at rank 1
-    val self = Similarity.ivfPqTopKFrom(spark, pA, grown,
+    val self = grownA.serve(grown,
       arriving.filter(col("vec_id") === 100007L)
         .select(col("vec_id").as("query_id"), col("embedding")))
       .filter(col("rank") === 1).collect()
@@ -1027,9 +1045,9 @@ class SimilaritySpec extends AnyFunSuite {
 
     // ROTATED bundle: append must encode through the STORED matrix
     val pR = s"$root/rot"
-    Similarity.buildIvfPqRotated(spark, sf, pR)
-    Similarity.appendIvfPq(spark, pR, arriving)
-    val selfR = Similarity.ivfPqTopKFrom(spark, pR, grown,
+    IvfPqIndex.train(spark, sf, rotated = true).save(pR)
+    IvfPqIndex.append(spark, pR, arriving)
+    val selfR = IvfPqIndex.load(spark, pR).serve(grown,
       arriving.filter(col("vec_id") === 100003L)
         .select(col("vec_id").as("query_id"), col("embedding")))
       .filter(col("rank") === 1).collect()
@@ -1041,22 +1059,23 @@ class SimilaritySpec extends AnyFunSuite {
     // commit → A aborts loudly, B's generation serves, A's orphaned
     // code parts are reclaimable, A's retry succeeds
     val pC = s"$root/cas"
-    Similarity.buildIvfPq(spark, sf, pC)
+    plain.save(pC)
     val battch = arriving.filter(col("vec_id") < 100010L)
     val abatch = arriving.filter(col("vec_id") >= 100030L)
-    IndexStore.metaWriteInterleave = Some(() =>
-      Similarity.appendIvfPq(spark, pC, battch))
+    IndexStore.metaWriteInterleave = Some(() => {
+      IvfPqIndex.append(spark, pC, battch); ()
+    })
     val e = intercept[IllegalStateException] {
-      try Similarity.appendIvfPq(spark, pC, abatch)
+      try IvfPqIndex.append(spark, pC, abatch)
       finally IndexStore.metaWriteInterleave = None
     }
     assert(e.getMessage.contains("concurrent writer"), e.getMessage)
-    assert(IndexStore.loadIvfPq(spark, pC)._3.count() == (nBase + 10) * 8,
+    assert(codeRows(pC) == (nBase + 10) * 8,
       "winner's append missing or loser's rows leaked")
     assert(IndexStore.vacuumIvfPqStore(spark, pC) > 0,
       "aborted append left no reclaimable orphans?")
-    Similarity.appendIvfPq(spark, pC, abatch)
-    assert(IndexStore.loadIvfPq(spark, pC)._3.count() == (nBase + 20) * 8)
+    IvfPqIndex.append(spark, pC, abatch)
+    assert(codeRows(pC) == (nBase + 20) * 8)
 
     // alien in-flight part files (a racing writer's not-yet-committed
     // append subdir) never leak into THIS append's manifest (ADVICE
@@ -1066,8 +1085,8 @@ class SimilaritySpec extends AnyFunSuite {
     Seq((999999L, 0L, 0L, 0L)).toDF("vec_id", "sub_id", "code", "list_id")
       .write.parquet(s"$pC/codes/append-alien0000")
     val more = arriving.filter(col("vec_id") >= 100010L && col("vec_id") < 100020L)
-    Similarity.appendIvfPq(spark, pC, more)
-    val codesNow = IndexStore.loadIvfPq(spark, pC)._3
+    IvfPqIndex.append(spark, pC, more)
+    val codesNow = IvfPqIndex.load(spark, pC).codes
     assert(codesNow.count() == (nBase + 30) * 8,
       "alien in-flight code file leaked into the append's manifest")
     assert(codesNow.filter(col("vec_id") === 999999L).isEmpty)
@@ -1075,27 +1094,29 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("appendIvfPq: shape mismatches fail fast naming the trained bundle (r18: dim/nSub intercepts over the artifacts-only validated load)") {
-    import graft.operators.Similarity
     val root = java.nio.file.Files.createTempDirectory("graftannshape").toString
     val p = s"$root/pq"
-    Similarity.buildIvfPq(spark, sf, p) // trained at nSub=8, dim=64
-    val arriving = graft.sources.Tables.embeddings(spark, sf)
+    // a non-default subspace split: the append must encode with the
+    // bundle's OWN n_sub, read from its meta — there is no caller
+    // nSub left to mismatch
+    IvfPqIndex.train(spark, sf, nSub = 4).save(p)
+    val arriving = Similarity.embeddingCorpus(spark, sf)
       .filter(col("vec_id") < 4)
       .select((col("vec_id") + lit(200000L)).as("vec_id"), col("embedding"))
-    // wrong nSub: the meta row's n_sub intercepts before any encode
-    val eSub = intercept[IllegalArgumentException](
-      Similarity.appendIvfPq(spark, p, arriving, nSub = 4, dim = 64))
-    assert(eSub.getMessage.contains("trained with n_sub=8"), eSub.getMessage)
-    // wrong dim: the trained centroid width (derived from the SAME
-    // one-action validation tally that checks the artifact counts —
-    // r18 folded the old one-row probe job into it) intercepts too
-    val eDim = intercept[IllegalArgumentException](
-      Similarity.appendIvfPq(spark, p, arriving, nSub = 8, dim = 32))
-    assert(eDim.getMessage.contains("trained at dim=64"), eDim.getMessage)
-    // and the matching shape still appends fine afterwards
-    Similarity.appendIvfPq(spark, p, arriving)
-    assert(graft.sources.IndexStore.loadIvfPq(spark, p)._3
-      .filter(col("vec_id") >= 200000L).count() == 4 * 8)
+    def appended() = IvfPqIndex.load(spark, p).codes
+      .filter(col("vec_id") >= 200000L).count()
+    // wrong width: arrivals of another dim than the trained centroids
+    // fail the encode naming the bundle's trained dim, and nothing
+    // commits
+    val e = intercept[Exception](IvfPqIndex.append(spark, p,
+      arriving.select(col("vec_id"), slice(col("embedding"), 1, 32).as("embedding"))))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msgs.contains(s"ivfpq bundle at $p: trained at dim=64"), msgs)
+    assert(appended() == 0)
+    // and the matching shape appends nSub = 4 code rows per vector
+    IvfPqIndex.append(spark, p, arriving)
+    assert(appended() == 4 * 4)
   }
 
   test("labelSpread: seeds clamp, labels reach non-seeds, seedless cluster stays NULL") {
